@@ -1,0 +1,29 @@
+package graftbench
+
+/** Minimal JSON rendering for the result line and the span file. */
+object Json {
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def value(v: Any): String = v match {
+    case null => "null"
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      require(!d.isNaN && !d.isInfinite, s"non-finite number $d")
+      d.toString
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: Map[_, _] => obj(m.toSeq.map { case (k, x) => k.toString -> x }: _*)
+  }
+
+  def obj(fields: (String, Any)*): String =
+    fields.map { case (k, v) => str(k) + ":" + value(v) }.mkString("{", ",", "}")
+}
