@@ -85,8 +85,7 @@ object AnnRecall {
     val probeIds = probes.select("p_id").collect().map(_.getLong(0)).toSet
     println(s"DEDUP-TRUTH probes=${probeIds.size} pairs=${truth.size}")
     Seq("ivf", "imi").foreach { side =>
-      spark.conf.set("spark.sql.graft.embBlocking", side)
-      try {
+      Tables.withConf(spark, "spark.sql.graft.embBlocking" -> side) {
         val t0 = System.nanoTime()
         val found = Dedup.embeddingCosBlocked(spark, sfDir).collect()
           .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")))
@@ -105,7 +104,7 @@ object AnnRecall {
         println(f"RECALL dd_embedding_blocked[$side%s] pairRecall=$recall%.3f " +
           f"found=${found.size}%d truth=${truth.size}%d wall=$wall%.1fs")
         println(s"  byBand[$side] $perBand")
-      } finally spark.conf.unset("spark.sql.graft.embBlocking")
+      }
       Tables.releaseIntermediates(spark)
     }
     spark.stop()

@@ -33,28 +33,25 @@ object Bench {
     // same build/substrate). An explicit GC at each query boundary makes
     // every query start from a reclaimed state; each still pays its own
     // materialization inside the clock.
-    // SPARK_GRAFT_BENCH_GC=0 disables the explicit GC — an A/B isolation
-    // aid for timing investigations (used to exonerate the GC when a
-    // repeated-execution slowdown was traced to a localCheckpoint barrier).
     def reclaim(): Unit = {
       Tables.releaseIntermediates(spark)
-      if (sys.env.get("SPARK_GRAFT_BENCH_GC").forall(_ == "1")) System.gc()
+      System.gc()
     }
     // Warmup: one untimed pass over every query.
     selected.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
       reclaim()
     }
-    // Three timed runs per query. `queries` carries the MIN (steady-state
-    // throughput, robust to one-off GC/scheduler noise — the number to
-    // compare against a baseline), and `spread` carries min/median/max so
-    // published claims reflect run-to-run variance instead of the best
-    // observed number. Checkpoint blocks are released AFTER the clock
-    // stops — each query still pays its own materialization cost, but
-    // queries don't tax each other through block-manager pressure.
+    // Three timed runs per query. `queries` carries the MEDIAN (robust
+    // to one-off GC/scheduler noise in either direction), and the
+    // min/median/max spread goes to a side file so published claims
+    // reflect run-to-run variance instead of the best observed number.
+    // Checkpoint blocks are released AFTER the clock stops — each query
+    // still pays its own materialization cost, but queries don't tax
+    // each other through block-manager pressure.
     // SPARK_GRAFT_BENCH_RUNS overrides for very large SFs where a single
-    // run is minutes and min-of-3 would burn the measurement budget; the
-    // emitted JSON records whatever was used.
+    // run is minutes and three runs would burn the measurement budget;
+    // the emitted JSON records whatever was used.
     val timedRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
     // A failed run must NOT become a timing sample: elapsed-to-exception
     // would publish a broken query as the suite's fastest. Failures are
@@ -75,29 +72,29 @@ object Bench {
     val samples = all.collect { case (n, ts) if ts.forall(_.isDefined) =>
       n -> ts.flatten.sorted
     }
-    val results = samples.map { case (name, ts) => name -> ts.head }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    def sec(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    val medians = samples.map { case (name, ts) => name -> ts(ts.size / 2) }
+    val qs = medians.map { case (k, v) => "\"" + k + "\":" + sec(v) }
       .mkString("{", ",", "}")
     val spread = samples.map { case (k, ts) =>
-      "\"" + k + "\":{\"min\":" + ts.head + ",\"med\":" + ts(ts.size / 2) +
-        ",\"max\":" + ts.last + "}"
+      "\"" + k + "\":{\"min\":" + sec(ts.head) + ",\"med\":" +
+        sec(ts(ts.size / 2)) + ",\"max\":" + sec(ts.last) + "}"
     }.mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val totalMax = if (samples.nonEmpty) samples.values.map(_.last).sum else 0.0
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$timedRuns,"total_max":$totalMax,"failed":$failedJson,"queries":$qs,"spread":$spread,"sf":"$sfDir"}"""
-    println(fullLine)
-    // The full line above is ~10-15 KB for the whole suite, and a harness
-    // that keeps only a bounded stdout tail cannot parse it (observed:
-    // every round's captured bench ends mid-line). Persist the full
-    // per-query JSON to a file for diffing, and END stdout with a compact
-    // line (same metric/value/unit/sf contract, well under 2 KB) so a
-    // tail-bounded consumer always has one complete parseable JSON line.
-    val benchFile = new java.io.File("bench_full.json")
-    val w = new java.io.PrintWriter(benchFile, "UTF-8")
-    try w.println(fullLine) finally w.close()
-    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$timedRuns,"total_max":$totalMax,"failed":$failedJson,"n_queries":${results.size},"queries_file":"${benchFile.getAbsolutePath}","sf":"$sfDir"}""")
+    val total = sec(medians.values.sum)
+    // The spread goes to a file named by scale factor and core count, so
+    // runs at different SFs or widths never overwrite each other.
+    val sfName = new java.io.File(sfDir).getName
+    val w = new java.io.PrintWriter(
+      new java.io.File(s"bench_spread_${sfName}_c$cpus.json"), "UTF-8")
+    try w.println(
+      s"""{"runs":$timedRuns,"failed":$failedJson,"spread":$spread,"sf":"$sfDir","cpus":$cpus}""")
+    finally w.close()
+    // The contract line, LAST on stdout: medians only, 3 decimals, so the
+    // whole suite's map stays a few KB and a tail-bounded consumer always
+    // has one complete parseable line.
+    println(
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$timedRuns,"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -148,6 +148,27 @@ object Tables {
     }
   }
 
+  /** Run `body` with the session confs `kvs` set, then put every key back
+    * as it was — its previous value, or unset — even when `body` throws.
+    * The one scoped-conf primitive: operators that pin a reader, time
+    * zone or state-store conf for a single query, and drivers that pin an
+    * oracle strategy, all go through here so repeated calls on a
+    * long-lived session never accumulate global state.
+    */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    // `getOption` answers a registered key's DEFAULT when it is unset;
+    // `getAll` holds only explicit settings, so an unset key stays unset
+    val set = conf.getAll
+    val saved = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally saved.reverseIterator.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   /** `.barrier()` as a chainable method — see [[Tables.barrier]]. */
   implicit class BarrierOps[T](private val ds: Dataset[T]) extends AnyVal {
     def barrier(): Dataset[T] = Tables.barrier(ds)

@@ -82,9 +82,15 @@ object TextOps {
       size(array_distinct(ws)).cast("double").as("n_uniq") :+
       size(filter(ws, w => w.isin("the", "a"))).cast("double").as("n_stop") :+
       length(regexp_replace(col("text"), "\\s", "")).cast("double").as("n_nonspace"): _*)
-    val keepNames = keep.map(c => col(d.select(c).columns.head))
+    // one analysis pass resolves every passthrough name; they share the
+    // projection with the stat columns, so a clash would be ambiguous
+    val keepNames =
+      if (keep.isEmpty) Nil else d.select(keep: _*).columns.toSeq
+    val clash = keepNames.intersect(
+      Seq("doc_id", "n_words", "n_uniq", "n_stop", "n_nonspace"))
+    require(clash.isEmpty, s"keep columns clash with quality stats: $clash")
     base.select(
-      col("doc_id") +: keepNames :+
+      col("doc_id") +: keepNames.map(col) :+
       col("n_words").cast("long").as("n_words") :+
       trunc4(col("n_stop") / col("n_words")).as("stop_ratio") :+
       trunc4(col("n_uniq") / col("n_words")).as("uniq_ratio") :+

@@ -73,94 +73,43 @@ object EventStream {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` capped at `width`,
-    * restored afterwards. Every stateful streaming operator spins one
-    * state store PER shuffle partition PER micro-batch, and under the
-    * multi-batch gate replay (9 batches by default) store setup/commit
-    * lifecycles dominate: at 32 partitions a single keyed-state query
-    * pays 288 store commit cycles for state that fits in a handful.
-    * Width=8 was measured for stream_purchase_context at sf10 in round 9
-    * (StreamStateAudit, interleaved min-of-3: 8 partitions min 15.7 s vs
-    * 32 partitions min 20.0 s even with 4M state rows) and purchase
-    * context got FASTER at sf100 while gaining eviction under it. An
-    * unbounded deployment sizes the width to its key cardinality instead;
-    * the cap never widens a session that is already narrower.
+  /** The session confs every events-table replay reads under:
+    * `events.ts` is parquet TIMESTAMP(NANOS) in the driver layout,
+    * declared LongType under the legacy nanos conf and rebuilt at
+    * micros, exactly like the batch loader ([[graft.Tables.events]]).
     */
-  private def withStoreCap[T](spark: org.apache.spark.sql.SparkSession,
-      width: Int)(body: => T): T = {
-    val conf = spark.conf
-    val key = "spark.sql.shuffle.partitions"
-    val prev = conf.getOption(key)
-    conf.set(key,
-      math.min(width, conf.get(key, width.toString).toInt).toString)
-    try body
-    finally prev.fold(conf.unset(key))(conf.set(key, _))
-  }
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 
-  /** Data-aware store width for single-input keyed-state replays
-    * (dedup, EMA): store lifecycles dominate while the replay is small —
-    * cap at 8 — but once per-batch data volume is the cost, commit
-    * parallelism wins and the session width stands. Measured at the
-    * crossover's two sides: sf0.1 capping 32 → 8 took the pair from
-    * ~18 s each to 4.8/4.9 s; at sf100 (120M events) a controlled A/B
-    * (same window, fresh JVM per config, min-of-2) ran width 8 at
-    * 113.3 s (dedup) / 82.2 s (EMA) vs width 32 at 94.6 / 58.6 — so the
-    * cap applies below 50M events (parquet-footer row count, memoized)
-    * and releases above. `spark.sql.graft.streamStoreCap` overrides the
-    * width explicitly (an unbounded deployment sizes it to key
-    * cardinality). The stream-stream JOIN keeps its fixed cap of 8
-    * regardless: four stores per partition quadruple the lifecycle
-    * cost and its horizon-bounded state stays small at every measured
-    * SF (sf100: 133–136 s capped, faster than the uncapped r12 shape).
+  /** `window`/`date_format` bucket in the SESSION time zone while the
+    * oracles' strftime buckets the raw UTC timestamp — they agree only
+    * under UTC.
+    */
+  private val Utc = "spark.sql.session.timeZone" -> "UTC"
+
+  /** `transformWithState` does not run on the default HDFS-backed store. */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Data-aware `spark.sql.shuffle.partitions` for the keyed-state
+    * replays (dedup, EMA, purchase context), scoped with
+    * [[graft.Tables.withConf]]. Every stateful operator spins one state
+    * store PER shuffle partition PER micro-batch, so while the replay is
+    * small the store setup/commit lifecycles dominate — cap the width at
+    * 8, never widening a session that is already narrower — but once
+    * per-batch data volume is the cost, commit parallelism wins and the
+    * session width stands. Measured at the crossover's two sides: sf0.1
+    * capping 32 → 8 took dedup and EMA from ~18 s each to 4.8/4.9 s; at
+    * sf100 (120M events) a controlled A/B (same window, fresh JVM per
+    * config, min-of-2) ran width 8 at 113.3 s (dedup) / 82.2 s (EMA) vs
+    * width 32 at 94.6 / 58.6 — so the cap applies below 50M events
+    * (parquet-footer row count, memoized) and releases above.
     */
   private def replayStoreWidth(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int =
-    spark.conf.getOption("spark.sql.graft.streamStoreCap").map(_.toInt)
-      .getOrElse {
-        if (graft.Tables.eventCount(spark, dir) >= 50000000L)
-          Int.MaxValue // leave the session width — no cap
-        else 8
-      }
-
-  /** Streaming read of the `events` table with a layout-adaptive `ts`:
-    * driver-generated data stores parquet TIMESTAMP(NANOS) (declared
-    * LongType under the legacy nanos conf, rebuilt at micros), while a
-    * re-written copy (ScaleUp — Spark can only write micros) is already
-    * TimestampType and passes through. Streaming schemas must be pinned
-    * up front, so the layout is probed once via a batch footer read.
-    * Caller must have set `spark.sql.legacy.parquet.nanosAsLong`.
-    */
-  private def eventsStream(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    eventsStream(spark, dir, eventsTsIsLong(spark, dir))
-
-  /** The one batch footer probe behind [[eventsStream]] — callers that
-    * build several stream branches over the same table run it once and
-    * pass the result down, instead of paying a driver-side parquet
-    * listing + footer read per branch.
-    */
-  /** Source admission knobs — the deployment shape is a DIRECTORY of
-    * arriving event files drained in bounded batches, which is also how
-    * the next-decade replay probes run (state eviction only exercises
-    * when the corpus spans multiple micro-batches):
-    *
-    *  - `spark.sql.graft.streamEventsGlob` — file admission glob
-    *    (default `events.parquet`, the one-file testdata layout; a
-    *    landing directory sets e.g. `events*.parquet`);
-    *  - `spark.sql.graft.streamMaxFiles` — maxFilesPerTrigger (honored
-    *    under AvailableNow: the file source implements
-    *    SupportsTriggerAvailableNow, pinning the tip and draining it in
-    *    capped batches).
-    */
-  private def eventsGlob(spark: org.apache.spark.sql.SparkSession): String =
-    spark.conf.getOption("spark.sql.graft.streamEventsGlob")
-      .getOrElse("events.parquet")
-
-  private def eventsTsIsLong(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = {
-    import org.apache.spark.sql.types._
-    spark.read.parquet(s"$dir/${eventsGlob(spark)}")
-      .schema("ts").dataType == LongType
+      dir: String): (String, String) = {
+    val key = "spark.sql.shuffle.partitions"
+    val width = spark.conf.get(key).toInt
+    key -> (if (graft.Tables.eventCount(spark, dir) >= 50000000L) width
+      else math.min(8, width)).toString
   }
 
   /** How many split-layout builds ran in this JVM (spec hook: serving
@@ -170,29 +119,20 @@ object EventStream {
     new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The number of time-ordered files a bounded gate replay is split
-    * into (`spark.sql.graft.streamReplaySplits` overrides; ≤1 disables
-    * the split and replays the raw single-file table in one batch).
-    *
-    * DATA-AWARE default, the [[replayStoreWidth]] discipline applied to
+    * into. DATA-AWARE, the [[replayStoreWidth]] discipline applied to
     * batch count: every micro-batch pays a fixed state-store
     * setup/commit lifecycle per store instance, so while the table is
-    * small that fixed cost dominates the replay (measured at sf0.1:
-    * stream_purchase_context spent ~1 s/batch of pure lifecycle across
-    * its four stores per partition). Batches are therefore sized to
-    * carry ≥ ~500k events each, floored at 2 — the watermark must
-    * advance mid-replay at least once or eviction never exercises and
-    * state grows to the whole input, the exact single-batch defect the
-    * split exists to prevent — and capped at 8, the deployable default
-    * (at sf10+ the cap binds and the shape is unchanged). The count is
-    * the memoized parquet-footer probe, not a data pass.
+    * small that fixed cost dominates the replay. Batches are therefore
+    * sized to carry ≥ ~500k events each, floored at 2 — the watermark
+    * must advance mid-replay at least once or eviction never exercises
+    * and state grows to the whole input, the exact single-batch defect
+    * the split exists to prevent — and capped at 8, the deployable
+    * default (at sf10+ the cap binds and the shape is unchanged). The
+    * count is the memoized parquet-footer probe, not a data pass.
     */
   private def replaySplits(spark: org.apache.spark.sql.SparkSession,
       dir: String): Int =
-    spark.conf.getOption("spark.sql.graft.streamReplaySplits")
-      .map(_.toInt).getOrElse {
-        val n = graft.Tables.eventCount(spark, dir)
-        math.max(2, math.min(8, (n / 500000L).toInt))
-      }
+    math.max(2, math.min(8, (graft.Tables.eventCount(spark, dir) / 500000L).toInt))
 
   /** Build-once TIME-SPLIT replay layout for the events table: the one
     * driver-layout file re-written as `splits` parquet files covering
@@ -201,12 +141,9 @@ object EventStream {
     * admission by mod time) replays them in event-time order. This is
     * what makes the gate run the DEPLOYABLE stream shape: a single-file
     * replay is ONE micro-batch, so watermarks never advance mid-run and
-    * every stateful operator holds its whole input as state (measured at
-    * sf100: stream_purchase_context buffered all 4M join rows in one
-    * batch — a state-store memory wall at the next decade). Split into
+    * every stateful operator holds its whole input as state. Split into
     * K batches, the watermark advances between batches and eviction
-    * bounds state to the horizon, exactly as in production (r9 measured
-    * ~250k steady-state rows vs 4M single-batch at sf10).
+    * bounds state to the horizon, exactly as in production.
     *
     * Range partitioning keys on (ts, event_id): event_id is assigned in
     * ts order by the generator, so the cross-file order agrees with both
@@ -229,17 +166,14 @@ object EventStream {
     val built = graft.functions.LayoutCache.serve(spark, layout, fp) {
       staging =>
         val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val conf = spark.conf
-        val outKey = "spark.sql.parquet.outputTimestampType"
-        val prevOut = conf.getOption(outKey)
         // micros, never INT96: the pinned-schema streaming reader
         // refuses INT96 (PARQUET_COLUMN_DATA_TYPE_MISMATCH)
-        conf.set(outKey, "TIMESTAMP_MICROS")
-        try
+        graft.Tables.withConf(spark,
+            "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
           graft.Tables.events(spark, dir)
             .repartitionByRange(splits, col("ts"), col("event_id"))
             .write.mode("overwrite").parquet(staging.toString)
-        finally prevOut.fold(conf.unset(outKey))(conf.set(outKey, _))
+        }
         // part-NNNNN names carry the range order; rename into the glob
         // shape and stamp ascending mod times (2 s apart — coarser than
         // any filesystem's timestamp granularity) so admission order is
@@ -260,42 +194,54 @@ object EventStream {
 
   /** Where and how a bounded gate replay reads the events table. */
   private case class ReplaySpec(dir: String, glob: String,
-      maxFiles: Option[String], tsIsLong: Boolean, batches: String)
+      maxFilesPerTrigger: Option[Int], tsIsLong: Boolean)
 
-  /** Resolve the replay admission shape ONCE per query (layout build +
-    * footer probe are driver-side): an explicitly configured
-    * `streamEventsGlob` names a user-managed landing directory and wins
-    * unchanged; otherwise the default is the time-split multi-batch
-    * layout ([[eventsSplitLayout]]) drained one file per trigger, the
-    * deployable bounded-state shape. `streamReplaySplits <= 1` falls
-    * back to the raw single-file single-batch replay.
+  /** The events table as ONE file drained in one batch — the replay of
+    * the complete-mode aggregations (daily stats, session windows), whose
+    * output is the final state however the input is batched. The `ts`
+    * layout is probed once via a batch footer read (streaming schemas
+    * must be pinned up front): driver-generated data stores
+    * TIMESTAMP(NANOS), declared LongType under [[NanosAsLong]], while a
+    * re-written copy (ScaleUp — Spark can only write micros) is already a
+    * timestamp and passes through.
+    */
+  private def singleFileReplay(spark: org.apache.spark.sql.SparkSession,
+      dir: String): ReplaySpec = {
+    import org.apache.spark.sql.types._
+    val tsIsLong = spark.read.parquet(s"$dir/events.parquet")
+      .schema("ts").dataType == LongType
+    ReplaySpec(dir, "events.parquet", None, tsIsLong)
+  }
+
+  /** The time-split multi-batch replay ([[eventsSplitLayout]]) drained one
+    * file per trigger — the deployable bounded-state shape, and the only
+    * admission the keyed-state queries read. Resolved ONCE per query
+    * (layout build + footer probe are driver-side).
     */
   private def resolveReplay(spark: org.apache.spark.sql.SparkSession,
       dir: String): ReplaySpec = {
-    val userGlob = spark.conf.getOption("spark.sql.graft.streamEventsGlob")
-    val maxFiles = spark.conf.getOption("spark.sql.graft.streamMaxFiles")
-    val spec =
-      if (userGlob.isDefined)
-        ReplaySpec(dir, userGlob.get, maxFiles,
-          eventsTsIsLong(spark, dir), "user")
-      else {
-        val k = replaySplits(spark, dir)
-        if (k <= 1)
-          ReplaySpec(dir, "events.parquet", maxFiles,
-            eventsTsIsLong(spark, dir), "single")
-        else
-          // split files are Spark-written micros timestamps
-          ReplaySpec(eventsSplitLayout(spark, dir, k), "split_*.parquet",
-            Some(maxFiles.getOrElse("1")), tsIsLong = false, s"$k")
-      }
-    graft.StrategyLog.record("stream_replay", spec.batches,
-      "glob" -> spec.glob, "maxFiles" -> spec.maxFiles.getOrElse("all"))
-    spec
+    val k = replaySplits(spark, dir)
+    graft.StrategyLog.record("stream_replay", s"$k",
+      "glob" -> "split_*.parquet", "maxFiles" -> "1")
+    // split files are Spark-written micros timestamps
+    ReplaySpec(eventsSplitLayout(spark, dir, k), "split_*.parquet",
+      Some(1), tsIsLong = false)
   }
 
-  /** A fresh stream instance over a resolved replay spec — callers that
-    * join several branches of the same table call this once per branch.
+  /** Run `body` over the time-split replay stream under the confs a
+    * keyed-state replay needs: [[NanosAsLong]] plus `confs`, then the
+    * [[replayStoreWidth]], which is sized inside the nanos scope because
+    * its row count reads the events table.
     */
+  private def withKeyedReplay[T](spark: org.apache.spark.sql.SparkSession,
+      dir: String, confs: (String, String)*)(body: DataFrame => T): T =
+    graft.Tables.withConf(spark, NanosAsLong +: confs: _*) {
+      graft.Tables.withConf(spark, replayStoreWidth(spark, dir)) {
+        body(replayStream(spark, resolveReplay(spark, dir)))
+      }
+    }
+
+  /** A fresh stream instance over a resolved replay spec. */
   private def replayStream(spark: org.apache.spark.sql.SparkSession,
       spec: ReplaySpec): DataFrame = {
     import org.apache.spark.sql.types._
@@ -306,26 +252,10 @@ object EventStream {
       StructField("value", DoubleType), StructField("props", StringType)))
     val rdr = spark.readStream.schema(schema)
       .option("pathGlobFilter", spec.glob)
-    val limited = spec.maxFiles.fold(rdr)(v => rdr.option("maxFilesPerTrigger", v))
+    val limited = spec.maxFilesPerTrigger
+      .fold(rdr)(v => rdr.option("maxFilesPerTrigger", v.toLong))
     val raw = limited.parquet(spec.dir)
     if (spec.tsIsLong) raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else raw
-  }
-
-  private def eventsStream(spark: org.apache.spark.sql.SparkSession,
-      dir: String, tsIsLong: Boolean): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", if (tsIsLong) LongType else TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val rdr = spark.readStream.schema(schema)
-      .option("pathGlobFilter", eventsGlob(spark))
-    val limited = spark.conf.getOption("spark.sql.graft.streamMaxFiles")
-      .fold(rdr)(v => rdr.option("maxFilesPerTrigger", v))
-    val raw = limited.parquet(dir)
-    if (tsIsLong) raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw
   }
 
@@ -521,32 +451,20 @@ object EventStream {
     */
   def emaScoresStreamed(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.conf
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = conf.getOption(provKey)
-    conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // The raw events table is parquet TIMESTAMP(NANOS): the footer probe
-    // behind resolveReplay (and the single-batch `streamReplaySplits<=1`
-    // replay itself) needs the legacy nanos conf set on THIS session —
-    // without it a fresh session throws Illegal Parquet type before the
-    // split-layout side effect of Tables.events can mask it.
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try withStoreCap(spark, replayStoreWidth(spark, dir)) {
+    withKeyedReplay(spark, dir, RocksDb) { events =>
       // The update stream emits one refreshed (ema, n) row per user per
-      // micro-batch it appears in — O(users × batches). That frame STAGES
-      // to parquet via foreachBatch (executor-side write), never a memory
-      // sink: the memory sink serializes every task result onto the
-      // driver, the exact pattern that died at spark.driver.maxResultSize
-      // for dedup_daily/session_stats at sf30 — per-user EMA state merely
-      // hits the same wall at higher user cardinality. Only the bounded
-      // per-user fold of the staged files is collected. The source is the
-      // default time-split multi-batch replay (event_id-ordered files, so
-      // the cross-batch fold order is the batch closed form's order);
+      // micro-batch it appears in — O(users × batches). That frame
+      // STAGES to parquet via foreachBatch (executor-side write), never
+      // a memory sink: the memory sink serializes every task result onto
+      // the driver, the exact pattern that died at
+      // spark.driver.maxResultSize for dedup_daily/session_stats at sf30
+      // — per-user EMA state merely hits the same wall at higher user
+      // cardinality. Only the bounded per-user fold of the staged files
+      // is collected. The time-split replay's files are event_id-ordered,
+      // so the cross-batch fold order is the batch closed form's order;
       // ts/event_type/props prune at the parquet scan.
       val staged = stageReplay(spark, outputMode = "update",
-        emaScores(replayStream(spark, resolveReplay(spark, dir))).toDF()) {
+        emaScores(events).toDF()) {
         (b, tmp) => b.write.mode("append").parquet(tmp)
       }
       try {
@@ -562,10 +480,6 @@ object EventStream {
         val rows = out.collect().toIndexedSeq
         spark.createDataFrame(rows.asJava, out.schema)
       } finally deleteStaged(spark, staged)
-    } finally {
-      prevProv.fold(conf.unset(provKey))(conf.set(provKey, _))
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
     }
   }
 
@@ -584,51 +498,29 @@ object EventStream {
     */
   def dailyStatsStreamed(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types._
-    // Session-conf mutations are scoped to this call and restored in the
-    // finally: repeated invocations (bench warmup + timed runs, long-lived
-    // sessions) must not accumulate global state.
-    val conf = spark.conf
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    val prevTz = conf.getOption("spark.sql.session.timeZone")
-    // events.ts is parquet TIMESTAMP(NANOS): declared LongType under the
-    // legacy nanos conf and rebuilt at microsecond precision, exactly like
-    // the batch loader (Tables.events) — schemas must be explicit for
-    // streaming reads anyway.
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // `window(ts, '1 day')` buckets in the SESSION timezone while the
-    // oracle's strftime buckets the raw UTC timestamp — they agree only
-    // under UTC, so pin it for the computation.
-    conf.set("spark.sql.session.timeZone", "UTC")
     val name = s"graft_stream_daily_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    try {
-      // the file-stream source wants a directory: scan the sf dir, admit
-      // only the events table (ts layout probed by eventsStream)
-      val q = eventsStream(spark, dir)
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total_value"))
-        .select(
-          date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-          col("event_type"), col("n_events"), col("total_value"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // Materialize the bounded result (day × type domain) into a local
-      // frame so the memory-sink table can be DROPPED before returning —
-      // otherwise every invocation leaks a UUID-named temp view holding
-      // the full result in driver memory.
-      val out = spark.table(name).orderBy("day", "event_type")
-      val rows = out.collect().toIndexedSeq
-      spark.createDataFrame(rows.asJava, out.schema)
-    } finally {
-      spark.catalog.dropTempView(name)
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
-      prevTz.fold(conf.unset("spark.sql.session.timeZone"))(
-        conf.set("spark.sql.session.timeZone", _))
+    graft.Tables.withConf(spark, NanosAsLong, Utc) {
+      try {
+        val q = replayStream(spark, singleFileReplay(spark, dir))
+          .groupBy(window(col("ts"), "1 day"), col("event_type"))
+          .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total_value"))
+          .select(
+            date_format(col("window.start"), "yyyy-MM-dd").as("day"),
+            col("event_type"), col("n_events"), col("total_value"))
+          .writeStream
+          .format("memory").queryName(name)
+          .outputMode("complete")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        // Materialize the bounded result (day × type domain) into a local
+        // frame so the memory-sink table can be DROPPED before returning —
+        // otherwise every invocation leaks a UUID-named temp view holding
+        // the full result in driver memory.
+        val out = spark.table(name).orderBy("day", "event_type")
+        val rows = out.collect().toIndexedSeq
+        spark.createDataFrame(rows.asJava, out.schema)
+      } finally spark.catalog.dropTempView(name)
     }
   }
 
@@ -646,8 +538,8 @@ object EventStream {
     * order, but the surviving KEY SET does not — so the query aggregates
     * the deduped stream (count of keys, distinct users per day) and THAT
     * is hash-checked against the batch count-distinct oracle. The gate
-    * replay defaults to the time-split multi-batch layout (one file per
-    * trigger), so the watermark advances between batches and dedup-state
+    * replay is the time-split multi-batch layout (one file per trigger),
+    * so the watermark advances between batches and dedup-state
     * eviction runs inside the gate; a key recurring beyond the 1h horizon
     * re-admits (the documented within-watermark contract), which cannot
     * change the answer because the bounded final aggregate below is
@@ -658,24 +550,17 @@ object EventStream {
   def streamDedupDaily(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.conf
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    val prevTz = conf.getOption("spark.sql.session.timeZone")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // date_format buckets in the session timezone; the oracle's strftime
-    // buckets raw UTC — agree only under UTC
-    conf.set("spark.sql.session.timeZone", "UTC")
-    try withStoreCap(spark, replayStoreWidth(spark, dir)) {
+    withKeyedReplay(spark, dir, Utc) { events =>
       // The deduped stream is O(corpus) (one row per distinct key) — it
-      // STAGES to parquet via foreachBatch (executor-side write), never a
-      // memory sink: the memory sink collects every task result onto the
-      // driver, which dies at spark.driver.maxResultSize once the key
-      // domain outgrows it (measured fatally at sf30: 1.03 GiB of
+      // STAGES to parquet via foreachBatch (executor-side write), never
+      // a memory sink: the memory sink collects every task result onto
+      // the driver, which dies at spark.driver.maxResultSize once the
+      // key domain outgrows it (measured fatally at sf30: 1.03 GiB of
       // serialized results against the 1 GiB cap). The aggregate below
       // reads the staged files distributed; only the bounded per-day
       // result ever reaches the driver.
       val staged = stageReplay(spark, outputMode = "append",
-        replayStream(spark, resolveReplay(spark, dir))
+        events
           .select(col("ts"), col("user_id"), col("event_type"))
           .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
           .withWatermark("ts", "1 hour")
@@ -684,13 +569,14 @@ object EventStream {
         (b, tmp) => b.write.mode("append").parquet(tmp)
       }
       try {
-        // Under the multi-batch replay the engine dedup emits one row per
-        // first-seen key WITHIN the 1h watermark horizon — a key recurring
-        // beyond the horizon re-admits (the documented within-watermark
-        // contract, its state bound). The staged volume is still
-        // horizon-deduped (orders of magnitude under the raw stream); the
-        // bounded final aggregate is EXACT-distinct over it, which is what
-        // any production consumer of a within-watermark dedup does too.
+        // Under the multi-batch replay the engine dedup emits one row
+        // per first-seen key WITHIN the 1h watermark horizon — a key
+        // recurring beyond the horizon re-admits (the documented
+        // within-watermark contract, its state bound). The staged volume
+        // is still horizon-deduped (orders of magnitude under the raw
+        // stream); the bounded final aggregate is EXACT-distinct over
+        // it, which is what any production consumer of a
+        // within-watermark dedup does too.
         val out = spark.read.schema(
             "day STRING, user_id BIGINT, event_type STRING")
           .parquet(staged)
@@ -703,11 +589,6 @@ object EventStream {
         val rows = out.collect().toIndexedSeq
         spark.createDataFrame(rows.asJava, out.schema)
       } finally deleteStaged(spark, staged)
-    } finally {
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
-      prevTz.fold(conf.unset("spark.sql.session.timeZone"))(
-        conf.set("spark.sql.session.timeZone", _))
     }
   }
 
@@ -766,10 +647,7 @@ object EventStream {
   def sessionStatsStreamed(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.conf
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try {
+    graft.Tables.withConf(spark, NanosAsLong) {
       // Complete mode re-emits EVERY session per trigger — O(corpus) —
       // so each emission folds to the per-user result DISTRIBUTED inside
       // foreachBatch and overwrites the staging dir (last trigger = final
@@ -778,7 +656,7 @@ object EventStream {
       // untouched — only the materialization of its output moved off the
       // driver.
       val staged = stageReplay(spark, outputMode = "complete",
-        sessionWindows(eventsStream(spark, dir), 1800)
+        sessionWindows(replayStream(spark, singleFileReplay(spark, dir)), 1800)
           .select(col("user_id"), col("n_events"), col("dur_sec"))) {
         (b, tmp) =>
           b.groupBy(col("user_id"))
@@ -801,34 +679,30 @@ object EventStream {
         val rows = out.collect().toIndexedSeq
         spark.createDataFrame(rows.asJava, out.schema)
       } finally deleteStaged(spark, staged)
-    } finally {
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
     }
   }
 
-  /** Per-user state for [[purchaseContextStreamed]]'s single-store path:
-    * a sorted buffer of the user's view timestamps (micros) within the
-    * 1-hour correlation horizon, maintained as `ListState`. One store
-    * per partition, versus the FOUR a stream-stream join spins (two per
-    * side), which at the bounded-replay batch counts made store
+  /** Per-user state for [[purchaseContextStreamed]]: a sorted buffer of
+    * the user's view timestamps (micros) within the 1-hour correlation
+    * horizon, maintained as `ListState`. One state store per partition —
+    * the watermarked stream-stream interval join this replaced spun four
+    * (two per side), which at the bounded-replay batch counts made store
     * setup/commit lifecycles the dominant cost of the query at every SF
     * (sf100: 133 s, ~4× the per-event work).
     *
     * Correctness leans on the replay admission order the split layout
-    * guarantees (see [[eventsSplitLayout]]): files cover disjoint
-    * ascending (ts, event_id) ranges, so every event in a later batch
-    * has ts ≥ every event in this one. A purchase only counts STRICTLY
-    * EARLIER views (`vts < pts`), hence all its matches are in its own
-    * or earlier batches — by the time the purchase row is processed
+    * guarantees (see [[eventsSplitLayout]]), and [[resolveReplay]] is the
+    * only source this query reads: files cover disjoint ascending
+    * (ts, event_id) ranges, so every event in a later batch has ts ≥
+    * every event in this one. A purchase only counts STRICTLY EARLIER
+    * views (`vts < pts`), hence all its matches are in its own or
+    * earlier batches — by the time the purchase row is processed
     * (within-batch rows are sorted by (ts, event_id) first), its full
     * view window is in the buffer. Same-timestamp views are excluded by
-    * the `vts < pts` bound regardless of processing order, exactly like
-    * the join condition. Eviction: a future purchase has
-    * pts ≥ the key's max seen ts, so views with
-    * vts < maxTs − 1h can never be counted again and are dropped —
-    * state is bounded by the per-user view rate over the horizon, the
-    * same bound the join's watermark eviction gives.
+    * the `vts < pts` bound regardless of processing order. Eviction: a
+    * future purchase has pts ≥ the key's max seen ts, so views with
+    * vts < maxTs − 1h can never be counted again and are dropped — state
+    * is bounded by the per-user view rate over the horizon.
     */
   private class PurchaseContextProcessor
       extends StatefulProcessor[Long, (Long, Long, Long, Boolean), (Long, Long)] {
@@ -880,30 +754,11 @@ object EventStream {
     * semantics — the reference's event-correlation surface as live
     * state. A purchase joins the same user's views in `[pts − 1h, pts)`.
     *
-    * Two implementations compute the identical result
-    * (`spark.sql.graft.streamPurchaseImpl` ∈ {state (default), join},
-    * strategy-logged; EventStreamSpec pins them row-identical and both
-    * against the batch join):
-    *
-    *  - **state** (default): ONE `transformWithState` operator keyed by
-    *    user — [[PurchaseContextProcessor]] buffers the horizon's views
-    *    per user and emits each purchase's final count the moment the
-    *    purchase row is processed. One state store per partition, one
-    *    read of each replay file per batch, and the staged frame is
-    *    O(purchases). Chosen because the join path's cost at every
-    *    measured SF was store lifecycles × batches, not per-event work
-    *    (4 stores/partition/batch), plus three separate stream branches
-    *    re-reading every replay file and an O(join pairs) staging.
-    *  - **join**: the watermarked stream-stream interval join, kept for
-    *    deployments that want engine-managed join state (unbounded
-    *    sources, speculative replays). Zero-view purchases come from a
-    *    stateless marker branch (one null row per purchase, unioned with
-    *    the join output) rather than a LEFT OUTER join: outer null rows
-    *    only flush when the watermark passes `pts` STRICTLY, so the
-    *    replay's final purchase — sitting exactly AT the terminal
-    *    watermark — would be stranded forever (off by one vs batch,
-    *    observed before this shape). The per-purchase count is the
-    *    bounded materialization of the append output.
+    * ONE `transformWithState` operator keyed by user:
+    * [[PurchaseContextProcessor]] buffers the horizon's views per user
+    * and emits each purchase's final count (zero included) the moment the
+    * purchase row is processed. One state store per partition, one read
+    * of each replay file per batch, and the staged frame is O(purchases).
     *
     * Gate-checked against the same DuckDB oracle as the batch query;
     * EventStreamSpec additionally pins row-for-row equality with
@@ -911,29 +766,11 @@ object EventStream {
     */
   def purchaseContextStreamed(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val impl = spark.conf
-      .getOption("spark.sql.graft.streamPurchaseImpl").getOrElse("state")
-    graft.StrategyLog.record("stream_purchase_context", impl)
-    if (impl == "join") purchaseContextJoin(spark, dir)
-    else purchaseContextState(spark, dir)
-  }
-
-  /** The single-store path of [[purchaseContextStreamed]]. */
-  private def purchaseContextState(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.conf
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = conf.getOption(provKey)
-    conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try withStoreCap(spark, replayStoreWidth(spark, dir)) {
-      val spec = resolveReplay(spark, dir)
+    withKeyedReplay(spark, dir, RocksDb) { events =>
       // one stream branch: purchases and views ride the same shuffle,
       // (ts, event_id) as plain micros/longs through the typed boundary
-      val typed = replayStream(spark, spec)
+      val typed = events
         .filter(col("event_type").isin("purchase", "view"))
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tsu"),
           (col("event_type") === "purchase").as("is_purchase"))
@@ -956,72 +793,6 @@ object EventStream {
         val rows = out.collect().toIndexedSeq
         spark.createDataFrame(rows.asJava, out.schema)
       } finally deleteStaged(spark, staged)
-    } finally {
-      prevProv.fold(conf.unset(provKey))(conf.set(provKey, _))
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
-    }
-  }
-
-  /** The stream-stream join path of [[purchaseContextStreamed]]. */
-  private def purchaseContextJoin(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types._
-    val conf = spark.conf
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // A stream-stream join spins FOUR state stores per shuffle partition
-    // — see [[withStoreCap]] for why the width is capped at 8 here. The
-    // fixed cap stands at every measured SF (unlike the single-input
-    // replays, whose width releases with data volume — [[replayStoreWidth]]),
-    // but the explicit override conf still applies so a deployment can
-    // size the join width to its arrival rate.
-    try withStoreCap(spark,
-      conf.getOption("spark.sql.graft.streamStoreCap").map(_.toInt).getOrElse(8)) {
-      // ONE layout resolve/build for all three branches; the default spec
-      // is the time-split multi-batch layout, so the watermark advances
-      // between batches and join-state eviction actually runs — state is
-      // bounded by the 1h horizon's arrival rate, not the corpus (the
-      // single-batch replay held all 4M purchase+view rows as state at
-      // sf10; r9 measured ~250k steady-state rows under this admission)
-      val spec = resolveReplay(spark, dir)
-      def src = replayStream(spark, spec)
-      val purchases = src.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("pts"))
-        .withWatermark("pts", "0 seconds")
-      val views = src.filter(col("event_type") === "view")
-        .select(col("user_id").as("v_uid"), col("ts").as("vts"))
-        .withWatermark("vts", "0 seconds")
-      val joined = purchases.join(views,
-          col("user_id") === col("v_uid") &&
-            col("vts") >= col("pts") - expr("INTERVAL 1 HOUR") &&
-            col("vts") < col("pts"))
-        .select(col("purchase_id"), col("vts"))
-      // stateless zero-fill: one null marker per purchase, not counted
-      val markers = src.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"),
-          lit(null).cast("timestamp").as("vts"))
-      // (purchase, view) join pairs are O(corpus) — staged to parquet,
-      // not a memory sink (see [[stageReplay]]; at sf30 this sink was
-      // the next one in line to cross the driver result cap)
-      val staged = stageReplay(spark, outputMode = "append",
-        joined.unionByName(markers)) {
-        (b, tmp) => b.write.mode("append").parquet(tmp)
-      }
-      try {
-        val out = spark.read
-          .schema("purchase_id BIGINT, vts TIMESTAMP")
-          .parquet(staged)
-          .groupBy(col("purchase_id"))
-          .agg(count(col("vts")).as("n_views_1h"))
-          .orderBy("purchase_id")
-        val rows = out.collect().toIndexedSeq
-        spark.createDataFrame(rows.asJava, out.schema)
-      } finally deleteStaged(spark, staged)
-    } finally {
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
     }
   }
 

@@ -21,6 +21,16 @@ class TextOpsSpec extends SparkSpec {
     }
   }
 
+  test("quality passthrough columns keep their names and refuse a stat-name clash") {
+    import org.apache.spark.sql.functions.{col, md5}
+    val docs = Tables.documents(spark, sfDir)
+    val kept = TextOps.qualityScoresDocsKeep(docs, Seq(md5(col("text")).as("digest")))
+    assert(kept.columns.take(2).toSeq === Seq("doc_id", "digest"))
+    intercept[IllegalArgumentException] {
+      TextOps.qualityScoresDocsKeep(docs, Seq(col("text").as("n_words")))
+    }
+  }
+
   test("langid predicts a language for every doc") {
     val rows = TextOps.langid(spark, sfDir).collect()
     assert(rows.length === Tables.documents(spark, sfDir).count())

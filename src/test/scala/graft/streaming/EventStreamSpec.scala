@@ -317,22 +317,6 @@ class EventStreamSpec extends SparkSpec {
       "the stream-stream interval join must compute exactly the batch join")
   }
 
-  test("purchase context state path and stream-stream join path are row-identical") {
-    val key = "spark.sql.graft.streamPurchaseImpl"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "join")
-      val joined = EventStream.purchaseContextStreamed(spark, sfDir)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      spark.conf.set(key, "state")
-      val state = EventStream.purchaseContextStreamed(spark, sfDir)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(state.toSeq === joined.toSeq,
-        "the single-store view-buffer processor must compute exactly the " +
-          "stream-stream interval join's result")
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   test("transformWithState maintains per-user EMA across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -448,6 +432,37 @@ class EventStreamSpec extends SparkSpec {
       s"memory-sink table leaked: ${(viewsAfter -- viewsBefore).mkString(",")}")
     assert(spark.conf.getOption("spark.sql.session.timeZone") === tzBefore,
       "session timezone must be restored after the bounded replay")
+  }
+
+  test("every stream query restores the session confs it scopes, set or unset") {
+    val keys = Seq(
+      "spark.sql.session.timeZone",
+      "spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.shuffle.partitions")
+    // values each query would overwrite inside its scope
+    val pinned = Seq("America/New_York", "false",
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+      "3")
+    val streams = graft.SparkEntry.queries.filter(_._1.startsWith("stream_"))
+    assert(streams.size === 5)
+    // explicit settings only: getOption would answer an unset key's default
+    def state = { val set = spark.conf.getAll; keys.map(k => k -> set.get(k)) }
+    val before = state
+    try for (setup <- Seq(keys.zip(pinned).map { case (k, v) => k -> Some(v) },
+        keys.map(_ -> None))) {
+      setup.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      streams.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+        assert(fn(spark, sfDir).count() > 0, name)
+        assert(state === setup, s"$name left a session conf changed")
+      }
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("split replay layout builds once, serves twice, rebuilds on source change") {
